@@ -9,13 +9,20 @@ Catalyst-planned, no RDDs) and adds the LLM-data-pipeline operators
 (dedup, similarity search, multimodal columns, text analysis) mandated
 for 100 TB-scale training-data work.
 
-Layout (SURVEY.md §7.1):
-    io.py          schemas + readers/writers (TSV/gz + parquet)
+Layout:
+    api.py         library entry points (run_pipeline_files,
+                   run_curation_files)
+    __main__.py    Fit-Hi-C CLI (python -m pfithic_spark)
+    curate.py      corpus-curation CLI
+    table.py       atomic-table maintenance CLI
+    session.py     SparkSession construction + engine confs
+    io.py          schemas + readers/writers (TSV/gz, parquet, atomic
+                   manifest tables)
     relational.py  filters / projections / joins / set ops
     aggregates.py  global & grouped aggregations
     windows.py     window functions, equal-occupancy binning, BH-FDR,
-                   scalable cumulative sums
-    functions.py   scalar function families
+                   two-phase global ordered scans
+    cache.py       keep-recent cache pools (probe and signature)
     stats.py       numpy statistical kernels (binom_sf, PAVA, spline)
     hic.py         composed significance pipeline (run_significance)
     llmops.py      dedup / similarity / text-analysis operators
@@ -23,7 +30,7 @@ Layout (SURVEY.md §7.1):
     streaming.py   Structured Streaming surface
     fixtures.py    deterministic fixture derivations shared with the
                    DuckDB oracle
-    registry.py    queries() / oracle_sql() registry for the driver
+    registry/      queries() / oracle_sql() registry for the driver
 """
 
 __version__ = "0.1.0"

@@ -19,16 +19,6 @@ from .hic import SigConfig, kr_biases, run_significance
 from .relational import remove_bad_fragments
 
 
-def chr_nbins_from_fragments(fragments: DataFrame, resolution: int) -> DataFrame:
-    """Grid size per chromosome from the fragment universe
-    (ref: generate_FragPairs builds the same census)."""
-    return fragments.groupBy("chr").agg(
-        (F.floor(F.max("frag_mid") / F.lit(resolution)) + 1)
-        .cast("int")
-        .alias("nbins")
-    )
-
-
 def bad_fragments(fragments: DataFrame) -> DataFrame:
     """badFrags: unmappable or zero-marginal loci
     (ref: generate_FragPairs filter)."""
@@ -143,20 +133,21 @@ def run_curation_files(
         max_df=max_df,
     ).persist()
     kept_docs = docs.join(keep.select("doc_id"), "doc_id", "left_semi").persist()
+    try:
+        os.makedirs(out_dir, exist_ok=True)
+        pio.write_parquet(keep, f"{out_dir}/keep_list.parquet")
+        pio.write_parquet(
+            kept_docs, f"{out_dir}/curated.parquet", partition_by=["source"]
+        )
+        seqs = llmops.pack_sequences(kept_docs, target_tokens=target_tokens)
+        pio.write_parquet(seqs, f"{out_dir}/sequences.parquet")
 
-    os.makedirs(out_dir, exist_ok=True)
-    pio.write_parquet(keep, f"{out_dir}/keep_list.parquet")
-    pio.write_parquet(
-        kept_docs, f"{out_dir}/curated.parquet", partition_by=["source"]
-    )
-    seqs = llmops.pack_sequences(kept_docs, target_tokens=target_tokens)
-    pio.write_parquet(seqs, f"{out_dir}/sequences.parquet")
-
-    n_in = docs.count()
-    n_kept = kept_docs.count()
-    n_seqs = seqs.count()  # already one row per packed sequence
-    keep.unpersist()
-    kept_docs.unpersist()
+        n_in = docs.count()
+        n_kept = kept_docs.count()
+        n_seqs = seqs.count()  # already one row per packed sequence
+    finally:
+        keep.unpersist()
+        kept_docs.unpersist()
     return {
         "n_input_docs": n_in,
         "n_kept_docs": n_kept,

@@ -462,7 +462,6 @@ def write_parquet_atomic(
         dict(early_meta.get("checks", {})) if mode == "append" else {}
     )
     active_checks = {**stored_checks, **(checks or {})}
-    df_persisted = False
     if active_checks:
         # Pre-resolve every constraint against THIS batch's columns:
         # type-only schema enforcement legally admits an additive batch
@@ -484,95 +483,96 @@ def write_parquet_atomic(
                     f"column or drop the constraint via overwrite"
                 ) from exc
         df = df.persist()
-        df_persisted = True
-        viol = df.agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.coalesce(F.expr(sql), F.lit(False)), 0
-                    ).otherwise(1)
-                ).alias(name)
-                for name, sql in active_checks.items()
-            ]
-        ).collect()[0]
-        bad = {n: int(viol[n]) for n in active_checks if viol[n]}
-        if bad:
-            df.unpersist()
-            raise ValueError(f"check constraints violated: {bad}")
-    staging = os.path.join(path, f"_staging_{txid}")
-    if zorder_by:
-        zdf, zkey = zorder_key(df, zorder_by)
-        (
-            zdf.repartitionByRange(int(zorder_files), F.col(zkey))
-            .sortWithinPartitions(zkey)
-            .drop(zkey)
-            .write.mode("overwrite")
-            .parquet(staging)
+    # one release point for every exit, raised or returned
+    try:
+        if active_checks:
+            viol = df.agg(
+                *[
+                    F.sum(
+                        F.when(
+                            F.coalesce(F.expr(sql), F.lit(False)), 0
+                        ).otherwise(1)
+                    ).alias(name)
+                    for name, sql in active_checks.items()
+                ]
+            ).collect()[0]
+            bad = {n: int(viol[n]) for n in active_checks if viol[n]}
+            if bad:
+                raise ValueError(f"check constraints violated: {bad}")
+        staging = os.path.join(path, f"_staging_{txid}")
+        if zorder_by:
+            zdf, zkey = zorder_key(df, zorder_by)
+            (
+                zdf.repartitionByRange(int(zorder_files), F.col(zkey))
+                .sortWithinPartitions(zkey)
+                .drop(zkey)
+                .write.mode("overwrite")
+                .parquet(staging)
+            )
+        else:
+            df.write.mode("overwrite").parquet(staging)
+        files = sorted(
+            os.path.join(f"_staging_{txid}", f)
+            for f in os.listdir(staging)
+            if f.endswith(".parquet")
         )
-    else:
-        df.write.mode("overwrite").parquet(staging)
-    files = sorted(
-        os.path.join(f"_staging_{txid}", f)
-        for f in os.listdir(staging)
-        if f.endswith(".parquet")
-    )
-    stats: dict[str, dict] = {}
-    if stats_cols:
-        for rel in files:
-            stats[rel] = _parquet_file_stats(
-                os.path.join(path, rel), list(stats_cols)
-            )
-    os.makedirs(path, exist_ok=True)
-    # ONE consistent read of the previous snapshot: seq, files, stats,
-    # and the txid registry all come from the same manifest — reading
-    # them in separate listings would let a concurrent commit land in
-    # between, producing a manifest whose txids acknowledge a
-    # transaction whose files it silently dropped
-    prev = _newest_manifest_meta(path)
-    prev_files = list(prev.get("files", []))
-    prev_stats = dict(prev.get("stats", {}))
-    if mode == "append":
-        files = prev_files + files
-        stats = {**prev_stats, **stats}
-        # re-run the (driver-cheap) type check against the SAME
-        # manifest the commit merges from: a schema migration that
-        # landed during the staging write is caught here instead of
-        # publishing mixed-type files under the migrated schema
-        _enforce_append_types(prev.get("schema"), df.schema)
-        # constraints added OR MODIFIED on the table while this batch
-        # staged bind it too — fail rather than publish a batch that
-        # was validated against a stale constraint set.  A (name, sql)
-        # pair in the commit-point manifest conflicts when it matches
-        # neither what this write validated (active_checks) nor what
-        # the table stored when the write began (stored_checks) — the
-        # second clause keeps a caller's deliberate same-name
-        # constraint update from self-conflicting when nothing moved
-        # concurrently.
-        late_checks = {
-            k: v
-            for k, v in dict(prev.get("checks", {})).items()
-            if v != active_checks.get(k) and v != stored_checks.get(k)
-        }
-        if late_checks:
-            if df_persisted:
-                df.unpersist()
-            raise ValueError(
-                "check constraints added or modified concurrently "
-                f"during this write: {sorted(late_checks)}; retry the "
-                "append"
-            )
-        # Merge the COMMIT-POINT stored set with only THIS CALL'S own
-        # constraints — not the full begin-time active_checks: merging
-        # the stale stored_checks back in would silently resurrect any
-        # constraint a concurrent writer DROPPED while this batch
-        # staged (round-8 ADVICE: adds/modifies conflict above, but
-        # drops were lost-updates).  A concurrent drop needs no
-        # conflict: it only relaxes what this batch already validated.
-        active_checks = {**dict(prev.get("checks", {})), **(checks or {})}
-    elif mode != "overwrite":
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    if df_persisted:
-        df.unpersist()
+        stats: dict[str, dict] = {}
+        if stats_cols:
+            for rel in files:
+                stats[rel] = _parquet_file_stats(
+                    os.path.join(path, rel), list(stats_cols)
+                )
+        os.makedirs(path, exist_ok=True)
+        # ONE consistent read of the previous snapshot: seq, files, stats,
+        # and the txid registry all come from the same manifest — reading
+        # them in separate listings would let a concurrent commit land in
+        # between, producing a manifest whose txids acknowledge a
+        # transaction whose files it silently dropped
+        prev = _newest_manifest_meta(path)
+        prev_files = list(prev.get("files", []))
+        prev_stats = dict(prev.get("stats", {}))
+        commit_checks = active_checks
+        if mode == "append":
+            files = prev_files + files
+            stats = {**prev_stats, **stats}
+            # re-run the (driver-cheap) type check against the SAME
+            # manifest the commit merges from: a schema migration that
+            # landed during the staging write is caught here instead of
+            # publishing mixed-type files under the migrated schema
+            _enforce_append_types(prev.get("schema"), df.schema)
+            # constraints added OR MODIFIED on the table while this batch
+            # staged bind it too — fail rather than publish a batch that
+            # was validated against a stale constraint set.  A (name, sql)
+            # pair in the commit-point manifest conflicts when it matches
+            # neither what this write validated (active_checks) nor what
+            # the table stored when the write began (stored_checks) — the
+            # second clause keeps a caller's deliberate same-name
+            # constraint update from self-conflicting when nothing moved
+            # concurrently.
+            late_checks = {
+                k: v
+                for k, v in dict(prev.get("checks", {})).items()
+                if v != active_checks.get(k) and v != stored_checks.get(k)
+            }
+            if late_checks:
+                raise ValueError(
+                    "check constraints added or modified concurrently "
+                    f"during this write: {sorted(late_checks)}; retry the "
+                    "append"
+                )
+            # Merge the COMMIT-POINT stored set with only THIS CALL'S own
+            # constraints — not the full begin-time active_checks: merging
+            # the stale stored_checks back in would silently resurrect any
+            # constraint a concurrent writer DROPPED while this batch
+            # staged (adds and modifies conflict above; a drop must not
+            # be lost).  A concurrent drop needs no conflict: it only
+            # relaxes what this batch already validated.
+            commit_checks = {**dict(prev.get("checks", {})), **(checks or {})}
+        elif mode != "overwrite":
+            raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+    finally:
+        if active_checks:
+            df.unpersist()
     seq = int(prev.get("seq", 0)) + 1
     txids, watermarks = _txid_record(path, prev, txid)
     return _commit_manifest_json(
@@ -602,7 +602,7 @@ def write_parquet_atomic(
             # spelled them first.  Physical rewrites carry the prior
             # set unvalidated via carry_checks (validated checks win
             # name collisions).
-            "checks": {**(carry_checks or {}), **active_checks},
+            "checks": {**(carry_checks or {}), **commit_checks},
         },
     )
 
@@ -843,24 +843,6 @@ def _newest_manifest_entry(path: str) -> tuple[str, dict]:
 
 def _newest_manifest_meta(path: str) -> dict:
     return _newest_manifest_entry(path)[1]
-
-
-def _newest_manifest_name(path: str) -> str:
-    return _newest_manifest_entry(path)[0]
-
-
-def _newest_manifest_full(path: str) -> tuple[int, list[str], dict]:
-    m = _newest_manifest_meta(path)
-    return (
-        int(m.get("seq", 0)),
-        list(m.get("files", [])),
-        dict(m.get("stats", {})),
-    )
-
-
-def _newest_manifest(path: str) -> tuple[int, list[str]]:
-    seq, files, _ = _newest_manifest_full(path)
-    return seq, files
 
 
 def _prune_by_stats(
@@ -1196,7 +1178,7 @@ def compact_parquet_atomic(
     staged = df.persist()
     staged.count()
     try:
-        now_seq, _ = _newest_manifest(path)
+        now_seq = int(_newest_manifest_meta(path).get("seq", 0))
         if now_seq != base_seq:
             raise ValueError(
                 f"compaction conflict: snapshot advanced {base_seq} -> "

@@ -19,20 +19,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-#: Storage level for the bounded signature/band/probe caches (round 14,
-#: VERDICT r13 task 7): MEMORY_AND_DISK **serialized** — the default
-#: deserialized level stores the columnar CachedBatch objects as JVM
-#: object graphs; the serialized form stores them as compact byte
-#: blocks, trading a small deser cost per read for lower storage
-#: memory and cheaper GC at 100 TB signature-table sizes.  Measured at
-#: sf0.1 (tools/measure_cache_storage.py): timings flat within the
-#: noise band, cached bytes strictly lower; numbers in
-#: OPTIMIZATION_r14.md.
-SIG_CACHE_LEVEL = StorageLevel(True, True, False, False, 1)
+from . import cache
 
 # --- normalization / fingerprints ---------------------------------------
 
@@ -593,7 +583,7 @@ def _drop_hot_buckets(
     data."""
     if max_bucket is None:
         return banded
-    banded = _track_sig_cache(banded.persist(SIG_CACHE_LEVEL))
+    banded = cache.SIGNATURES.add(banded)
     hot = (
         banded.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("_bn"))
@@ -662,14 +652,13 @@ def minhash_lsh_pairs(
     # table three times.  Tracked (not bare .cache()) so the next pair-
     # generator call — or release_signature_caches() — frees it instead
     # of accruing executor memory across a many-corpus session.
-    sigs = _track_sig_cache(
+    sigs = cache.SIGNATURES.add(
         hashed.groupBy("doc_id")
         .agg(*mins)
         .select(
             "doc_id",
             F.array(*[f"_m{i}" for i in range(_MINHASH_N)]).alias("sig"),
         )
-        .persist(SIG_CACHE_LEVEL)
     )
     banded = sigs.select(
         "doc_id",
@@ -722,47 +711,9 @@ def minhash_lsh_pairs(
 
 #: Signature/band tables cached by minhash_lsh_pairs / simhash_pairs
 #: (each generator tracks its signature table AND, when the hot-bucket
-#: cap is active, its banded table), kept so the pair generators'
-#: self-joins read them without recompute.  Tracked here so long-lived
-#: sessions sweeping many corpora never accrue executor memory: the
-#: tracker keeps only the FOUR most recent caches — two frames per
-#: generator, so building a minhash and a simhash pipeline before
-#: materializing either (the common interleave) keeps both warm —
-#: evicting older ones; callers can force release with
-#: release_signature_caches().  Eviction is only a perf event:
-#: unpersist never invalidates a lazy result, it just recomputes.
-import threading as _threading
-
-_LIVE_SIG_CACHES: list[DataFrame] = []
-_SIG_CACHE_LOCK = _threading.Lock()
-_SIG_CACHE_KEEP = 4
-
-
-def release_signature_caches() -> None:
-    """Unpersist signature tables cached by the LSH pair generators.
-
-    Safe at any time — unpersist never invalidates a result, it only
-    forces recompute for readers that have not materialized yet."""
-    with _SIG_CACHE_LOCK:
-        drop, _LIVE_SIG_CACHES[:] = _LIVE_SIG_CACHES[:], []
-    for df in drop:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def _track_sig_cache(df: DataFrame) -> DataFrame:
-    with _SIG_CACHE_LOCK:
-        _LIVE_SIG_CACHES.append(df)
-        drop = _LIVE_SIG_CACHES[:-_SIG_CACHE_KEEP]
-        _LIVE_SIG_CACHES[:] = _LIVE_SIG_CACHES[-_SIG_CACHE_KEEP:]
-    for old in drop:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    return df
+#: cap is active, its banded table) live in cache.SIGNATURES, so
+#: long-lived sessions sweeping many corpora keep at most four of them.
+release_signature_caches = cache.SIGNATURES.release
 
 
 # --- SimHash -------------------------------------------------------------
@@ -847,9 +798,7 @@ def simhash_pairs(
     # tracked so the next pair-generator call (or an explicit
     # release_signature_caches()) frees it — no growth across a
     # many-corpus session
-    sigs = _track_sig_cache(
-        simhash_signatures(docs, text_col, id_col).persist(SIG_CACHE_LEVEL)
-    )
+    sigs = cache.SIGNATURES.add(simhash_signatures(docs, text_col, id_col))
     chunk = F.explode(
         F.array(
             *[
@@ -2132,12 +2081,12 @@ def lsh_cosine_pairs(
                 (F.col(f"d{j}") >= 0).cast("long") * F.lit(1 << k)
             )
         band_cols.append(expr.alias(f"band{b}"))
-    # signature table CACHED (the _track_sig_cache discipline of
+    # signature table CACHED (the cache.SIGNATURES discipline of
     # minhash_lsh_pairs): a per-band join over uncached signatures
     # would re-run the posexplode+groupBy build once per band per join
     # side — measured as 4 signature passes / 6 source scans with
     # zero exchange reuse (column pruning makes each subtree distinct)
-    sig = _track_sig_cache(dots.select("id", *band_cols).persist(SIG_CACHE_LEVEL))
+    sig = cache.SIGNATURES.add(dots.select("id", *band_cols))
     banded = sig.select(
         "id",
         F.explode(

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from .. import aggregates as agg  # noqa: F401
+from .. import cache
 from .. import fixtures as fx  # noqa: F401
 from .. import hic  # noqa: F401
 from .. import llmops  # noqa: F401
@@ -325,7 +326,7 @@ def q_bm25(spark, sf_dir):
     # doc-grain invariant read by two consumers (stats and scoring);
     # output is corpus-keyed, so the shared keep-4 eviction pool owns
     # the release (q_lm_score discipline)
-    wide = llmops._track_sig_cache(wide.persist(llmops.SIG_CACHE_LEVEL))
+    wide = cache.SIGNATURES.add(wide)
     stats_df = wide.agg(
         F.count(F.lit(1)).alias("n_docs"),
         (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avg_dl"),
@@ -982,7 +983,7 @@ def q_pmi_bigrams(spark, sf_dir):
     # eager checkpoint, which pays a full construction-time job
     # (measured 1.85× vs 1.4× at sf0.1)
     for inv in invariants:
-        llmops._track_sig_cache(inv)
+        cache.SIGNATURES.add(inv)
     return out
 
 
@@ -1004,7 +1005,7 @@ def pmi_bigrams_lazy(spark, sf_dir):
     pc = pairs.groupBy("w1", "w2").agg(
         F.count(F.lit(1)).alias("c12")
     )
-    pc = pc.persist(llmops.SIG_CACHE_LEVEL)
+    pc = pc.persist(cache.LEVEL)
     n_df = pc.agg(F.sum("c12").alias("n"))
     c12 = pc.filter(F.col("c12") >= _PMI_MIN_COUNT)
     c1 = pc.groupBy("w1").agg(F.sum("c12").alias("c1"))

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
 from .. import aggregates as agg  # noqa: F401
+from .. import cache
 from .. import fixtures as fx  # noqa: F401
 from .. import hic  # noqa: F401
 from .. import llmops  # noqa: F401
@@ -474,7 +475,7 @@ def q_lm_score(spark, sf_dir):
     # there is no bounded materialization point to unpersist behind —
     # registered in the shared eviction pool instead (keep-4, the LSH
     # signature-cache discipline)
-    pc = llmops._track_sig_cache(pc.persist(llmops.SIG_CACHE_LEVEL))
+    pc = cache.SIGNATURES.add(pc)
     c1 = pc.groupBy("w1").agg(F.sum("c12").alias("c1"))
     scored = (
         bi.join(pc, ["w1", "w2"])

@@ -25,6 +25,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window  # noqa: F401
 from pyspark.sql import functions as F  # noqa: F401
 
+from .. import cache
 from .. import io as pio
 from .. import llmops  # noqa: F401
 from .. import windows as win  # noqa: F401
@@ -655,38 +656,22 @@ def compaction_plan(
             "cum_before", F.sum("n_rows").over(wc) - F.col("n_rows")
         )
     else:
-        # scalable spine (VERDICT r11 #5): value-bucket by n_rows
-        # DESCENDING (equal values never split across buckets, so the
-        # per-bucket (n_rows DESC, bucket) window is globally
-        # consistent), local running sums, broadcast prefix offsets —
-        # the scalable_cumsum two-phase shape with a descending
-        # leading order
+        # scalable spine: value buckets on n_rows DESCENDING (equal
+        # values never split across buckets, so the per-bucket
+        # (n_rows DESC, bucket) order is globally consistent), then
+        # the shared two-phase running sum
         parted = win._bucketed_by_value(
             cands0, "n_rows", None, descending=True
         )
-        w_local = (
-            Window.partitionBy("_pid")
-            .orderBy(F.col("n_rows").desc(), "bucket")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        local = parted.withColumn("_lc", F.sum("n_rows").over(w_local))
-        totals = parted.groupBy("_pid").agg(
-            F.sum("n_rows").alias("_pt")
-        )
-        w_pre = Window.orderBy("_pid").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offs = totals.select(
-            "_pid",
-            F.coalesce(F.sum("_pt").over(w_pre), F.lit(0)).alias("_off"),
-        )
         packed = (
-            local.join(F.broadcast(offs), "_pid")
-            .withColumn(
-                "cum_before",
-                F.col("_off") + F.col("_lc") - F.col("n_rows"),
+            win._two_phase_scan(
+                parted,
+                [],
+                [F.col("n_rows").desc(), "bucket"],
+                {"_cum": ("sum", "n_rows", "inclusive")},
             )
-            .drop("_pid", "_lc", "_off")
+            .withColumn("cum_before", F.col("_cum") - F.col("n_rows"))
+            .drop("_pid", "_cum")
         )
     cands = (
         packed
@@ -1748,7 +1733,7 @@ def minhash_calibration_from(
     # cached (doc_id, h1..h8) table — 8 hex strings per doc — now
     # serves all of them; band rows derive from the cache.  Tracked
     # like the other LSH signature caches (bounded keep-4 tracker).
-    m = llmops._track_sig_cache(llmops.md5_minhash_signatures(d).persist(llmops.SIG_CACHE_LEVEL))
+    m = cache.SIGNATURES.add(llmops.md5_minhash_signatures(d))
     bands = llmops.md5_minhash_band_rows_from_sigs(m)
     # hot-bucket cap (LSH_MAX_BUCKET discipline): a band bucket of B
     # docs emits C(B,2) candidates; mass-duplicated boilerplate

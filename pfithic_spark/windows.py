@@ -1,52 +1,52 @@
 """Window operators (SURVEY.md §2.5) + the scale-critical primitives:
-equal-occupancy binning, BH-FDR, and a two-phase global cumulative sum.
+equal-occupancy binning, BH-FDR, and distributed global ordered scans.
 
 The reference's binning is a pandas ``sort_values`` + ``cumsum``
 [P pFitHiC vectorization of `fithic.py::calculateProbabilities`]; its
 BH correction is a sorted walk [P `fithic.py::benjamini_hochberg_correction`].
 A naive Spark translation — ``Window.orderBy(...)`` with no
-``partitionBy`` — collapses to ONE task and dies at 100 TB.  The
-two-phase form here (SURVEY.md §4.4) keeps every step distributed:
+``partitionBy`` — collapses to ONE task and dies at 100 TB.  Every
+global ordered scan here (row number, running sum, running max,
+suffix min) takes one two-phase form (SURVEY.md §4.4), written once in
+:func:`_two_phase_scan`:
 
-1. range-repartition by the order key (equal keys co-locate);
-2. per-partition running aggregate (ordinary partitioned window);
-3. per-partition totals (one row each) → prefix offsets via a window
-   over the tiny totals table → broadcast join back.
+1. stamp each row with a value bucket ``_pid`` (:func:`_bucketed_by_value`);
+2. per-(part, bucket) running aggregate (ordinary partitioned window);
+3. per-bucket totals (one row each) → prefix over earlier buckets via
+   a window over the tiny totals table → join back as offsets.
 
 All in DataFrame ops, so Catalyst/AQE still optimize around it.
 
-CORRECTNESS NOTE (round 6, adversarial review): every two-phase helper
-branches its lineage at the bucket-stamped DataFrame — one branch takes
-the per-bucket window, the other the per-bucket totals — so the two
-branches MUST agree on every row's bucket id.  The original form
-stamped ``spark_partition_id()`` after ``repartitionByRange`` and was
-only consistent because AQE exchange reuse happened to dedupe the two
-identical ``rangepartitioning`` exchanges: with
-``spark.sql.exchange.reuse=false`` each branch re-executes the
-repartition with an independently SAMPLED RangePartitioner (the sampler
-seeds from the new rdd.id), boundaries can differ, and the offset join
-silently mis-ranks.  The fix makes ``_pid`` a PURE FUNCTION OF THE
-ORDER VALUE: quantile boundaries of the leading order column are
+``_pid`` is a pure function of the order value.  The scan branches its
+lineage at the bucket-stamped frame — one branch takes the per-bucket
+window, the other the per-bucket totals — so both branches must agree
+on every row's bucket, even when each re-executes on its own: with
+``spark.sql.exchange.reuse=false`` nothing dedupes identical exchanges,
+and a RangePartitioner re-samples its boundaries on every execution,
+so a bucket taken from ``spark_partition_id()`` after
+``repartitionByRange`` can differ between the branches and silently
+mis-rank.  Quantile boundaries of the leading order column are instead
 collected ONCE driver-side (a one-pass approxQuantile, no shuffle) and
-frozen as literals, so any re-execution of any branch derives identical
-bucket ids by construction — no materialization, no optimizer
-dependence, and exchange reuse remains a pure optimization (identical
-deterministic subtrees still dedupe at runtime).  Equal leading-column
-values always share a bucket (strict boundary compares), so global
-ranks stay exact for any total order led by that column; a heavily tied
-leading column degrades to fewer effective buckets — the same skew
-behavior range partitioning had.  Leading order columns must be numeric
-(enforced fail-fast; all callers pre-aggregate or derive them); NULLs
-are routed to the bucket Spark's default null ordering would place them
-in, so they rank exactly as under a plain ``Window.orderBy``.
+frozen as literals, so every execution of every branch derives the same
+bucket ids — no materialization, no optimizer dependence, and exchange
+reuse stays a pure optimization.  Equal leading-column values always
+share a bucket (strict boundary compares), so global ranks stay exact
+for any total order led by that column; a heavily tied leading column
+degrades to fewer effective buckets.  Leading order columns must be
+numeric (enforced fail-fast; all callers pre-aggregate or derive
+them); NULLs are routed to the bucket Spark's default null ordering
+would place them in, so they rank exactly as under a plain
+``Window.orderBy``.
 """
 
 from __future__ import annotations
 
-import threading as _threading
+import operator
 
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from . import cache
 
 
 #: Phase-2 parallelism of every two-phase helper equals the bucket
@@ -64,96 +64,40 @@ _MAX_BUCKETS = 2048
 #: run at 100 TB.
 SMALL_THRESHOLD_DEFAULT = 2_000_000
 
-
-#: Probe-input caches persisted by the scalable_* helpers (round 13).
-#: Every helper that runs an EAGER action on its input at
-#: plan-construction time — the small_threshold count probe, or
-#: _bucketed_by_value's approxQuantile boundary pass — used to
-#: re-execute the caller's full upstream lineage once per action plus
-#: once (rank helpers: twice — the window input AND the per-bucket
-#: counts subtree sit on different exchanges) inside the returned
-#: plan, because separate query executions never share shuffle stages.
-#: Persisting the input before the first eager action makes every
-#: later reference a cache read (measured min-of-5 at sf0.1:
-#: q_auc_by_group 1.98→1.38 s, q_conformal_interval 2.60→2.05 s,
-#: q_weighted_quantile 1.98→1.62 s, q_roc_auc 1.00→0.91 s,
-#: q_energy_distance 1.41→1.16 s, q_anomaly_zscore 2.37→2.09 s; the
-#: one small loss is a tiny-input caller, q_cliffs_delta
-#: 0.60→0.71 s).  Applied ONLY on the count-probe
-#: sites: the same persist ahead of _bucketed_by_value's
-#: approxQuantile pass regressed the rank-based keys (see the note
-#: there) and was reverted.  Round-8 ADVICE removed an earlier probe
-#: cache because it
-#: had no safe unpersist point and leaked across long sessions; this
-#: tracker bounds that by keeping only the most recent
-#: _PROBE_CACHE_KEEP frames (the llmops signature-cache discipline) —
-#: eviction is a perf event, never a correctness one, and
-#: release_probe_caches() frees everything on demand.
-_LIVE_PROBE_CACHES: list[DataFrame] = []
-_PROBE_CACHE_LOCK = _threading.Lock()
-_PROBE_CACHE_KEEP = 4
-
-#: Serialized MEMORY_AND_DISK for the probe caches (round 14, VERDICT
-#: r13 task 7 — the llmops.SIG_CACHE_LEVEL rationale: compact byte
-#: blocks instead of JVM object graphs; timings flat at sf0.1, storage
-#: strictly lower — numbers in OPTIMIZATION_r14.md).
-from pyspark import StorageLevel as _StorageLevel
-
-_PROBE_CACHE_LEVEL = _StorageLevel(True, True, False, False, 1)
-
-
-def release_probe_caches() -> None:
-    """Unpersist probe-input caches held by the scalable_* helpers."""
-    with _PROBE_CACHE_LOCK:
-        drop, _LIVE_PROBE_CACHES[:] = _LIVE_PROBE_CACHES[:], []
-    for df in drop:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+#: Unpersist the inputs the helpers below persisted for a size probe.
+release_probe_caches = cache.PROBES.release
 
 
 def _probe_persist(df: DataFrame) -> DataFrame:
-    """Persist ``df`` ahead of an eager probe action, tracked with
-    bounded keep-most-recent eviction.  A frame the CALLER already
-    persisted passes through untouched (their cache, their unpersist
-    point)."""
-    if df.is_cached:
-        return df
-    df = df.persist(_PROBE_CACHE_LEVEL)
-    with _PROBE_CACHE_LOCK:
-        _LIVE_PROBE_CACHES.append(df)
-        drop = _LIVE_PROBE_CACHES[:-_PROBE_CACHE_KEEP]
-        _LIVE_PROBE_CACHES[:] = _LIVE_PROBE_CACHES[-_PROBE_CACHE_KEEP:]
-    for old in drop:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    return df
-
-
-def _probe_release_if_large(df: DataFrame, n_in: int, threshold: int) -> None:
-    """Drop an over-threshold probe cache IMMEDIATELY (round-14 ADVICE):
-    only confirmed-small inputs stay cached.  At 100 TB an input that
-    fails the small-threshold probe is arbitrarily large, and holding
-    it in MEMORY_AND_DISK until keep-4 eviction is exactly the
-    executor memory/disk-pressure hazard the llmops shingle-table note
-    declines a persist over — the two-phase path's re-reads of the
-    frame are column-pruned scans, the cheaper price at that size.  A
-    caller-persisted frame is never in the tracker and is left alone
+    """Persist ``df`` into the bounded probe pool ahead of an eager
+    action whose returned plan reads ``df`` again, so the caller's
+    upstream lineage executes once instead of once per action.  A
+    frame the caller already persisted passes through untracked
     (their cache, their release point)."""
-    if n_in <= threshold:
-        return
-    with _PROBE_CACHE_LOCK:
-        try:
-            _LIVE_PROBE_CACHES.remove(df)
-        except ValueError:
-            return
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+    return df if df.is_cached else cache.PROBES.add(df)
+
+
+def _small_input(
+    df: DataFrame, small_threshold: int | None, precomputed_count: int | None
+) -> tuple[DataFrame, bool]:
+    """``(df, small)``: whether ``df`` has at most ``small_threshold``
+    rows, so the plain one-task window beats the two-phase form (whose
+    extra jobs dwarf a bounded-grain window).  No threshold means
+    ``small`` is False.  The row count is ``precomputed_count`` when
+    given, else an eager count of ``df`` persisted by
+    :func:`_probe_persist`.  Only confirmed-small inputs stay cached:
+    an input over the threshold is arbitrarily large at scale, and the
+    two-phase plan's column-pruned re-reads cost less than holding it
+    in MEMORY_AND_DISK until eviction."""
+    if not small_threshold:
+        return df, False
+    if precomputed_count is not None:
+        return df, precomputed_count <= small_threshold
+    df = _probe_persist(df)
+    small = df.count() <= small_threshold
+    if not small:
+        cache.PROBES.discard(df)
+    return df, small
 
 
 def _bsearch_bucket(col: Column, seq: list, descending: bool, lo: int, hi: int):
@@ -227,14 +171,13 @@ def _bucketed_by_value(
     bounds: list = []
     if n > 1:
         probs = [i / n for i in range(1, n)]
-        # NOT persisted here (round-13 measurement): an unconditional
-        # persist ahead of this boundary pass regressed the rank-based
-        # keys (q_quantile_sketch 2.7 s → 4.8 s, q_pinball_loss 2.0 s
-        # → 2.3 s min-of-5 at sf0.1) — their inputs are cheap
-        # projections of already-materialized frames, so the cache
-        # write costs more than the saved re-execution.  Callers with
-        # genuinely expensive lineage persist before calling (the
-        # q_hodges_lehmann discipline).
+        # The input is NOT persisted ahead of this boundary pass: the
+        # rank-based callers feed cheap projections of already
+        # materialized frames, where the cache write costs more than
+        # the re-execution it saves (q_quantile_sketch 2.7 s → 4.8 s,
+        # q_pinball_loss 2.0 s → 2.3 s min-of-5 at sf0.1 with a
+        # persist).  Callers with expensive lineage persist before
+        # calling (the q_hodges_lehmann discipline).
         # one pass, no shuffle; boundaries are a partitioning CHOICE —
         # any value produces correct ranks, so the sketch's epsilon
         # only affects balance
@@ -250,6 +193,82 @@ def _bucketed_by_value(
             F.col(bucket_col).isNull(), F.lit(null_bucket)
         ).otherwise(pid)
     return df.withColumn("_pid", pid.cast("int"))
+
+
+_COMBINE = {"sum": operator.add, "max": F.greatest, "min": F.least}
+
+
+def _two_phase_scan(
+    parted: DataFrame,
+    part_cols: list[str],
+    order_cols: list,
+    outs: dict[str, tuple],
+    tots: dict | None = None,
+    reverse: bool = False,
+) -> DataFrame:
+    """Globally ordered running aggregates over a ``_pid``-stamped
+    frame (:func:`_bucketed_by_value`) without a one-task window: the
+    one two-phase scan every helper here is built on.
+
+    The order is ``order_cols`` within each ``part_cols`` group; its
+    leading column must be the one ``_pid`` was stamped from, so bucket
+    order is row order.  Buckets run in ascending ``_pid``, or in
+    descending ``_pid`` when ``reverse`` (a suffix scan over buckets
+    stamped ascending).  ``outs`` maps each output column to ``(op,
+    value, frame)``: ``op`` is ``"sum"``, ``"max"`` or ``"min"``,
+    ``value`` a column name or Column, ``frame`` ``"inclusive"`` (up to
+    and including the row) or ``"exclusive"`` (strictly earlier rows).
+    ``tots`` maps output columns to values whose sum over the whole
+    part is attached to every row.
+
+    Each output is the running value within the row's (part, bucket)
+    combined with an offset over the part's earlier buckets: ``local +
+    offset`` for sums, where the offset before the first bucket is 0;
+    ``greatest``/``least`` for max/min, where it is NULL (which both
+    skip).  A running count is ``("sum", F.lit(1), "inclusive")``, the
+    same number as ``row_number`` under the same sort.  An exclusive
+    sum is NULL on each bucket's first row; use the inclusive sum minus
+    the value.
+
+    The offsets table has one row per (part, bucket).  With no part
+    columns that is at most ``_MAX_BUCKETS`` rows and it is broadcast;
+    with part columns it grows with the number of parts, so it joins
+    as a plain equi-join (AQE still broadcasts it when it measures
+    small).
+
+    Returns ``parted``'s columns (``_pid`` included, part columns
+    first), then the ``tots``, then the ``outs``."""
+    keys = [*part_cols, "_pid"]
+    w_local = W.partitionBy(*keys).orderBy(*order_cols)
+    w_buckets = W.partitionBy(*part_cols).orderBy(
+        F.col("_pid").desc() if reverse else "_pid"
+    )
+    local, bucket_aggs, offsets = parted, [], []
+    for out, (op, value, frame) in outs.items():
+        agg = getattr(F, op)
+        end = W.currentRow if frame == "inclusive" else -1
+        local = local.withColumn(
+            "_lv_" + out,
+            agg(value).over(w_local.rowsBetween(W.unboundedPreceding, end)),
+        )
+        bucket_aggs.append(agg(value).alias("_bv_" + out))
+        off = agg("_bv_" + out).over(
+            w_buckets.rowsBetween(W.unboundedPreceding, -1)
+        )
+        if op == "sum":
+            off = F.coalesce(off, F.lit(0))
+        offsets.append(off.alias("_off_" + out))
+    whole = w_buckets.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+    for out, value in (tots or {}).items():
+        bucket_aggs.append(F.sum(value).alias("_bv_" + out))
+        offsets.append(F.sum("_bv_" + out).over(whole).alias(out))
+    offs = parted.groupBy(*keys).agg(*bucket_aggs).select(*keys, *offsets)
+    out_df = local.join(offs if part_cols else F.broadcast(offs), keys)
+    for out, (op, _, _) in outs.items():
+        out_df = out_df.withColumn(
+            out, _COMBINE[op](F.col("_lv_" + out), F.col("_off_" + out))
+        )
+    return out_df.drop(*[p + out for out in outs for p in ("_lv_", "_off_")])
 
 
 def scalable_rank(
@@ -268,36 +287,45 @@ def scalable_rank(
     names the LEADING order column (numeric, non-null; pass
     ``descending=True`` when it leads descending).
 
-    Value-deterministic bucketing (see module docstring) →
-    per-bucket row_number + broadcast prefix-count offsets.
-    Returns the input columns plus ``rank_col`` (1-based global rank),
-    ``_pid`` (callers running further per-bucket phases need it —
-    drop it otherwise), and optionally ``tot_col`` (the global row
-    count, same on every row)."""
+    A running count over :func:`_two_phase_scan`.  Returns the input
+    columns plus ``rank_col`` (1-based global rank, long), ``_pid``
+    (callers running further per-bucket phases need it — drop it
+    otherwise), and optionally ``tot_col`` (the global row count, same
+    on every row)."""
     parted = _bucketed_by_value(df, bucket_col, num_partitions, descending)
-    w_local = W.partitionBy("_pid").orderBy(*order_cols)
-    d = parted.withColumn("_lrk", F.row_number().over(w_local))
-    counts = parted.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
-    w_pre = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    sel = [
-        F.col("_pid"),
-        F.coalesce(F.sum("_cnt").over(w_pre), F.lit(0)).alias("_off"),
-    ]
-    if tot_col is not None:
-        sel.append(
-            F.sum("_cnt")
-            .over(
-                W.orderBy("_pid").rowsBetween(
-                    W.unboundedPreceding, W.unboundedFollowing
-                )
-            )
-            .alias(tot_col)
-        )
-    offs = counts.select(*sel)
-    return (
-        d.join(F.broadcast(offs), "_pid")
-        .withColumn(rank_col, (F.col("_lrk") + F.col("_off")).cast("long"))
-        .drop("_lrk", "_off")
+    tots = {tot_col: F.lit(1)} if tot_col is not None else None
+    return _two_phase_scan(
+        parted, [], order_cols, {rank_col: ("sum", F.lit(1), "inclusive")}, tots
+    )
+
+
+def _running_sums(
+    df: DataFrame,
+    part_cols: list[str],
+    order_col: str,
+    sums: dict[str, str],
+    tots: dict[str, str],
+    num_partitions: int | None,
+    small_threshold: int | None,
+    precomputed_count: int | None,
+) -> DataFrame:
+    """The cumsum helpers' shared body: per-part running sums and
+    whole-part totals, as a plain window when :func:`_small_input`
+    says the input is small, else through :func:`_two_phase_scan`."""
+    df, small = _small_input(df, small_threshold, precomputed_count)
+    if small:
+        w = W.partitionBy(*part_cols).orderBy(order_col)
+        running = w.rowsBetween(W.unboundedPreceding, W.currentRow)
+        whole = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
+        for out, vc in sums.items():
+            df = df.withColumn(out, F.sum(vc).over(running))
+        for out, vc in tots.items():
+            df = df.withColumn(out, F.sum(vc).over(whole))
+        return df
+    parted = _bucketed_by_value(df, order_col, num_partitions)
+    outs = {out: ("sum", vc, "inclusive") for out, vc in sums.items()}
+    return _two_phase_scan(parted, part_cols, [order_col], outs, tots).drop(
+        "_pid"
     )
 
 
@@ -319,49 +347,15 @@ def scalable_cumsum(
     ``small_threshold``: when set, the input is counted (count skipped
     when the caller passes ``precomputed_count``); at or below the
     threshold a plain single-partition window is used — for
-    bounded-cardinality inputs the two-phase machinery (range
-    repartition + sampling + offset join) costs several extra jobs that
-    dwarf a one-task window.  The probe count does NOT cache the input
-    (round-8 ADVICE: a probe cache has no safe unpersist point — the
-    returned plan reads it lazily — so it leaked executor memory
-    across long sessions; the count scan is column-pruned, and callers
-    with expensive lineage should persist before calling or pass
-    ``precomputed_count``).  Pass None (default) to force the
+    bounded-cardinality inputs the two-phase machinery (sampling +
+    offset join) costs several extra jobs that dwarf a one-task
+    window.  The probe persists the input into the bounded probe pool
+    (:func:`_small_input`).  Pass None (default) to force the
     two-phase form.
     """
-    if small_threshold:
-        n_in = precomputed_count
-        if n_in is None:
-            # the probe is an eager action and the returned plan reads
-            # df again: persist first (bounded tracker, see
-            # _probe_persist) so upstream lineage executes once; an
-            # over-threshold frame is released immediately (see
-            # _probe_release_if_large)
-            df = _probe_persist(df)
-            n_in = df.count()
-            _probe_release_if_large(df, n_in, small_threshold)
-        if n_in <= small_threshold:
-            w = W.orderBy(order_col).rowsBetween(
-                W.unboundedPreceding, W.currentRow
-            )
-            return df.withColumn(out_col, F.sum(value_col).over(w))
-    parted = _bucketed_by_value(df, order_col, num_partitions)
-    w_local = (
-        W.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = parted.withColumn("_local_cum", F.sum(value_col).over(w_local))
-    # one row per partition → the offset computation is trivially small
-    totals = parted.groupBy("_pid").agg(F.sum(value_col).alias("_ptot"))
-    w_prefix = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid", F.coalesce(F.sum("_ptot").over(w_prefix), F.lit(0)).alias("_off")
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.col("_local_cum") + F.col("_off"))
-        .drop("_pid", "_local_cum", "_off")
+    return _running_sums(
+        df, [], order_col, {out_col: value_col}, {},
+        num_partitions, small_threshold, precomputed_count,
     )
 
 
@@ -384,67 +378,16 @@ def scalable_cumsum_multi(
     ``sums``: ``{out_col: value_col}`` running sums (inclusive,
     UNBOUNDED PRECEDING..CURRENT ROW under ``order_col``); ``tots``:
     ``{out_col: value_col}`` whole-frame sums attached to every row
-    (rides the same broadcast offsets frame — no extra shuffle and no
-    second unpartitioned window over data grain).  Same contracts as
+    (rides the same offsets frame — no extra shuffle and no second
+    unpartitioned window over data grain).  Same contracts as
     scalable_cumsum: ``order_col`` unique per row (pre-aggregate
     first), ``small_threshold`` keeps the plain one-task window at or
     below the threshold so bounded-grain fixture plans stay unchanged.
     """
-    tots = tots or {}
-    if small_threshold:
-        n_in = precomputed_count
-        if n_in is None:
-            # persist before the eager probe (see _probe_persist);
-            # over-threshold frames released immediately
-            df = _probe_persist(df)
-            n_in = df.count()
-            _probe_release_if_large(df, n_in, small_threshold)
-        if n_in <= small_threshold:
-            w = W.orderBy(order_col).rowsBetween(
-                W.unboundedPreceding, W.currentRow
-            )
-            wall = W.orderBy(order_col).rowsBetween(
-                W.unboundedPreceding, W.unboundedFollowing
-            )
-            for out, vc in sums.items():
-                df = df.withColumn(out, F.sum(vc).over(w))
-            for out, vc in tots.items():
-                df = df.withColumn(out, F.sum(vc).over(wall))
-            return df
-    parted = _bucketed_by_value(df, order_col, num_partitions)
-    w_local = (
-        W.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    return _running_sums(
+        df, [], order_col, sums, tots or {},
+        num_partitions, small_threshold, precomputed_count,
     )
-    local = parted
-    for out, vc in sums.items():
-        local = local.withColumn("_lc_" + out, F.sum(vc).over(w_local))
-    # one row per bucket → offsets/totals computation is trivially small
-    value_cols = sorted(set(sums.values()) | set(tots.values()))
-    totals = parted.groupBy("_pid").agg(
-        *[F.sum(vc).alias("_pt_" + vc) for vc in value_cols]
-    )
-    w_prefix = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    w_all = W.orderBy("_pid").rowsBetween(
-        W.unboundedPreceding, W.unboundedFollowing
-    )
-    off_sel = [F.col("_pid")]
-    for out, vc in sums.items():
-        off_sel.append(
-            F.coalesce(F.sum("_pt_" + vc).over(w_prefix), F.lit(0)).alias(
-                "_off_" + out
-            )
-        )
-    for out, vc in tots.items():
-        off_sel.append(F.sum("_pt_" + vc).over(w_all).alias(out))
-    offsets = totals.select(*off_sel)
-    out_df = local.join(F.broadcast(offsets), "_pid")
-    for out in sums:
-        out_df = out_df.withColumn(
-            out, F.col("_lc_" + out) + F.col("_off_" + out)
-        ).drop("_lc_" + out, "_off_" + out)
-    return out_df.drop("_pid")
 
 
 def per_distance_totals(contacts_with_dist: DataFrame) -> DataFrame:
@@ -474,7 +417,8 @@ def equal_occupancy_assign(
     """
     n_dists = None
     if small_threshold:
-        byd = byd.cache()  # reused by the agg, the cumsum and the stats
+        # reused by the agg, the cumsum and the stats
+        byd = _probe_persist(byd)
         if total is None:
             # one job for both scalars the decision needs
             n_dists, total = byd.agg(
@@ -557,14 +501,13 @@ def bh_fdr(
     if n_rows is not None:
         w_desc = W.orderBy(
             F.col(p_col).desc(), *[F.col(c).desc() for c in tiebreak]
-        ).rowsBetween(W.unboundedPreceding, W.currentRow)
-        rk = F.lit(int(n_rows) + 1) - F.row_number().over(
-            W.orderBy(F.col(p_col).desc(), *[F.col(c).desc() for c in tiebreak])
         )
+        rk = F.lit(int(n_rows) + 1) - F.row_number().over(w_desc)
         q_raw = F.least(F.lit(1.0), F.col(p_col) * F.lit(float(m)) / rk)
+        running = w_desc.rowsBetween(W.unboundedPreceding, W.currentRow)
         return (
             df.withColumn("_q_raw", q_raw)
-            .withColumn(q_col, F.min("_q_raw").over(w_desc))
+            .withColumn(q_col, F.min("_q_raw").over(running))
             .drop("_q_raw")
         )
     w_rank = W.orderBy(F.col(p_col), *[F.col(c) for c in tiebreak])
@@ -615,11 +558,10 @@ def bh_fdr_scalable(
     """Distributed BH-FDR: identical semantics to :func:`bh_fdr` with no
     single-task global window.
 
-    Two-phase global rank (:func:`scalable_rank` — value-deterministic
-    p-value buckets → per-bucket row_number + broadcast prefix-count
-    offsets) and two-phase suffix-min for the monotonicity step
-    (per-bucket suffix-min + broadcast min-of-later-buckets).  The
-    tiebreak chain must make the ordering total.
+    Two-phase global rank (:func:`scalable_rank`), then the
+    monotonicity step's suffix min as a reversed
+    :func:`_two_phase_scan` over the rank's buckets.  The tiebreak
+    chain must make the ordering total.
     """
     tiebreak = tiebreak or []
     if m is None:
@@ -637,29 +579,18 @@ def bh_fdr_scalable(
         "_q_raw",
         F.least(F.lit(1.0), F.col(p_col) * F.lit(float(m)) / F.col("_rk")),
     )
-    # suffix-min over global rank: local suffix + min of later partitions.
-    # Keep the descending-order running-min form — an ascending-order
-    # frame [currentRow, unboundedFollowing] looks like it would share
-    # the rank window's sort, but Spark's shrinking-frame executor is
-    # O(n^2) per partition (recomputes the min per row).
-    w_desc = (
-        W.partitionBy("_pid")
-        .orderBy(F.col("_rk").desc())
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    # Suffix min as a running min in DESCENDING rank order, buckets
+    # reversed.  An ascending frame [currentRow, unboundedFollowing]
+    # would share the rank window's sort, but Spark executes shrinking
+    # frames by recomputing the aggregate per row: O(n^2) per bucket.
+    d = _two_phase_scan(
+        d, [], [F.col("_rk").desc()], {q_col: ("min", "_q_raw", "inclusive")},
+        reverse=True,
     )
-    d = d.withColumn("_sfx", F.min("_q_raw").over(w_desc))
-    pid_mins = d.groupBy("_pid").agg(F.min("_q_raw").alias("_pmin"))
-    w_tail = W.orderBy(F.col("_pid").desc()).rowsBetween(
-        W.unboundedPreceding, -1
+    # _q_raw never exceeds 1.0, so 1.0 is the min of an empty suffix
+    return d.withColumn(q_col, F.coalesce(q_col, F.lit(1.0))).drop(
+        "_pid", "_rk", "_q_raw"
     )
-    tails = pid_mins.select(
-        "_pid",
-        F.coalesce(F.min("_pmin").over(w_tail), F.lit(1.0)).alias("_tailmin"),
-    )
-    d = d.join(F.broadcast(tails), "_pid").withColumn(
-        q_col, F.least(F.col("_sfx"), F.col("_tailmin"))
-    )
-    return d.drop("_pid", "_rk", "_q_raw", "_sfx", "_tailmin")
 
 
 def scalable_cummax_exclusive(
@@ -671,31 +602,16 @@ def scalable_cummax_exclusive(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Running max over all STRICTLY-PRECEDING rows in a global order,
-    without a single-task global window — same two-phase shape as
-    :func:`scalable_cumsum` (value-deterministic buckets →
-    per-bucket window → broadcast prefix offsets), max instead of
-    sum, exclusive frame.  ``order_col`` values must be unique per row
+    without a single-task global window — :func:`_two_phase_scan`
+    with max instead of sum and an exclusive frame.  ``order_col`` values must be unique per row
     (pre-aggregate first).  Rows with no predecessor get NULL."""
     ord_expr = F.col(order_col).desc() if descending else F.col(order_col).asc()
     parted = _bucketed_by_value(
         df, order_col, num_partitions, descending=descending
     )
-    w_local = (
-        W.partitionBy("_pid")
-        .orderBy(ord_expr)
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    local = parted.withColumn("_local_max", F.max(value_col).over(w_local))
-    totals = parted.groupBy("_pid").agg(F.max(value_col).alias("_ptot"))
-    w_prefix = W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
-    offsets = totals.select(
-        "_pid", F.max("_ptot").over(w_prefix).alias("_off")
-    )
-    return (
-        local.join(F.broadcast(offsets), "_pid")
-        .withColumn(out_col, F.greatest("_local_max", "_off"))
-        .drop("_pid", "_local_max", "_off")
-    )
+    return _two_phase_scan(
+        parted, [], [ord_expr], {out_col: ("max", value_col, "exclusive")}
+    ).drop("_pid")
 
 
 def scalable_trailing_aggs(
@@ -712,7 +628,7 @@ def scalable_trailing_aggs(
     """Trailing bounded-frame window aggregates — frame
     ``ROWS BETWEEN lookback PRECEDING AND (1 PRECEDING | CURRENT ROW)``
     over ``order_cols`` within ``part_cols`` — WITHOUT one task per
-    partition value (round 7; the q_anomaly_zscore modernization).
+    partition value (the q_anomaly_zscore spine).
 
     ``W.partitionBy(event_type)`` parallelism equals the number of
     distinct partition values: with a handful of event types, 100 TB of
@@ -744,32 +660,18 @@ def scalable_trailing_aggs(
 
     ``small_threshold``: when set, the input is counted and at or
     below the threshold the plain partitioned window is used — the
-    bounded-grain fast path of :func:`scalable_cumsum`, because the
-    two-phase machinery costs several extra jobs that dwarf small
-    inputs.  The probe count does NOT cache the input (round-8 ADVICE:
-    a probe cache has no safe unpersist point — the returned plan
-    reads it lazily — so it leaked executor memory across long
-    sessions; the count scan is column-pruned, and callers with
-    expensive lineage should persist before calling).  Pass None to
-    force the scalable form.
+    bounded-grain fast path of :func:`scalable_cumsum`, probe and
+    probe cache included (:func:`_small_input`).  Pass None to force
+    the scalable form.
     """
     lo = -int(lookback)
     hi = 0 if include_current else -1
-    if small_threshold:
-        # persist before the eager probe (see _probe_persist);
-        # over-threshold frames released immediately
-        df = _probe_persist(df)
-        n_in = df.count()
-        _probe_release_if_large(df, n_in, small_threshold)
-        if n_in <= small_threshold:
-            w = (
-                W.partitionBy(*part_cols)
-                .orderBy(*order_cols)
-                .rowsBetween(lo, hi)
-            )
-            return df.select(
-                "*", *[c.over(w).alias(name) for name, c in aggs.items()]
-            )
+    df, small = _small_input(df, small_threshold, None)
+    if small:
+        w = W.partitionBy(*part_cols).orderBy(*order_cols).rowsBetween(lo, hi)
+        return df.select(
+            "*", *[c.over(w).alias(name) for name, c in aggs.items()]
+        )
     C = int(max(lookback, chunk or 65536))
     d = scalable_part_rank(
         df, part_cols, order_cols, rank_col="_r", num_partitions=num_partitions
@@ -814,42 +716,22 @@ def scalable_part_rank(
 ) -> DataFrame:
     """Exact per-partition row_number over ``order_cols`` within
     ``part_cols`` WITHOUT one task per partition value — the per-part
-    generalization of :func:`scalable_rank` (factored out of
-    :func:`scalable_trailing_aggs` phase 1–2, round 7).
+    generalization of :func:`scalable_rank`.
 
     ``W.partitionBy(part).orderBy(...)`` row_number serializes each
     partition value onto one task; with few values (shards, event
-    types) that is a handful of tasks at any data volume.  Here:
-    value-deterministic buckets on the LEADING order column
-    (:func:`_bucketed_by_value` — numeric, frozen quantile literals so
-    every lineage branch agrees) → per-(part, bucket) row_number →
-    broadcast per-part prefix-count offsets.  Parallelism is
-    #parts × #buckets.  ``order_cols`` must totally order rows within
-    a part when exact per-row ranks matter (add a tiebreak chain).
+    types) that is a handful of tasks at any data volume.  Here a
+    running count over :func:`_two_phase_scan` with value buckets on
+    the LEADING order column (numeric): parallelism is #parts ×
+    #buckets.  ``order_cols`` must totally order rows within a part
+    when exact per-row ranks matter (add a tiebreak chain).
 
     Returns the input columns plus ``rank_col`` (1-based within each
-    part).  Internals (``_pid``, ``_lr``, ``_off``) are dropped."""
+    part, long)."""
     parted = _bucketed_by_value(df, order_cols[0], num_partitions)
-    w_local = W.partitionBy(*part_cols, "_pid").orderBy(*order_cols)
-    d = parted.withColumn("_lr", F.row_number().over(w_local))
-    counts = parted.groupBy(*part_cols, "_pid").agg(
-        F.count(F.lit(1)).alias("_cnt")
-    )
-    w_pre = (
-        W.partitionBy(*part_cols)
-        .orderBy("_pid")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offs = counts.select(
-        *part_cols,
-        "_pid",
-        F.coalesce(F.sum("_cnt").over(w_pre), F.lit(0)).alias("_off"),
-    )
-    return (
-        d.join(offs, [*part_cols, "_pid"])
-        .withColumn(rank_col, (F.col("_lr") + F.col("_off")).cast("long"))
-        .drop("_pid", "_lr", "_off")
-    )
+    return _two_phase_scan(
+        parted, part_cols, order_cols, {rank_col: ("sum", F.lit(1), "inclusive")}
+    ).drop("_pid")
 
 
 def scalable_part_cumsum(
@@ -864,57 +746,19 @@ def scalable_part_cumsum(
 ) -> DataFrame:
     """Per-partition globally ordered running sum WITHOUT one task per
     partition value — the per-part sibling of :func:`scalable_cumsum`
-    (factored for q_auc_by_group's per-slice prefix spine, round 10:
-    ``W.partitionBy(segment)`` serializes each slice onto ONE task, so
-    a 5-value segment column caps parallelism at 5 while each task
-    still carries n/5 of a value grain that grows with volume).
+    (q_auc_by_group's per-slice prefix spine: ``W.partitionBy(segment)``
+    serializes each slice onto ONE task, so a 5-value segment column
+    caps parallelism at 5 while each task still carries n/5 of a value
+    grain that grows with volume).
 
-    Value-deterministic buckets on ``order_col`` (frozen quantile
-    literals — every lineage branch agrees) → per-(part, bucket)
-    running sum → broadcast per-part prefix offsets.  Parallelism is
-    #parts × #buckets.  ``order_col`` must be unique per row WITHIN a
-    part (pre-aggregate first).  ``small_threshold``: same contract as
-    :func:`scalable_cumsum` — at or below, the plain partitioned
-    window (bounded-grain fixture plans unchanged)."""
-    if small_threshold:
-        n_in = precomputed_count
-        if n_in is None:
-            # persist before the eager probe (see _probe_persist);
-            # over-threshold frames released immediately
-            df = _probe_persist(df)
-            n_in = df.count()
-            _probe_release_if_large(df, n_in, small_threshold)
-        if n_in <= small_threshold:
-            w = (
-                W.partitionBy(*part_cols)
-                .orderBy(order_col)
-                .rowsBetween(W.unboundedPreceding, W.currentRow)
-            )
-            return df.withColumn(out_col, F.sum(value_col).over(w))
-    parted = _bucketed_by_value(df, order_col, num_partitions)
-    w_local = (
-        W.partitionBy(*part_cols, "_pid")
-        .orderBy(order_col)
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    local = parted.withColumn("_lc", F.sum(value_col).over(w_local))
-    totals = parted.groupBy(*part_cols, "_pid").agg(
-        F.sum(value_col).alias("_pt")
-    )
-    w_pre = (
-        W.partitionBy(*part_cols)
-        .orderBy("_pid")
-        .rowsBetween(W.unboundedPreceding, -1)
-    )
-    offs = totals.select(
-        *part_cols,
-        "_pid",
-        F.coalesce(F.sum("_pt").over(w_pre), F.lit(0)).alias("_off"),
-    )
-    return (
-        local.join(F.broadcast(offs), [*part_cols, "_pid"])
-        .withColumn(out_col, F.col("_lc") + F.col("_off"))
-        .drop("_pid", "_lc", "_off")
+    Value buckets on ``order_col`` → :func:`_two_phase_scan` per part.
+    Parallelism is #parts × #buckets.  ``order_col`` must be unique per
+    row WITHIN a part (pre-aggregate first).  ``small_threshold``: same
+    contract as :func:`scalable_cumsum` — at or below, the plain
+    partitioned window (bounded-grain fixture plans unchanged)."""
+    return _running_sums(
+        df, part_cols, order_col, {out_col: value_col}, {},
+        num_partitions, small_threshold, precomputed_count,
     )
 
 

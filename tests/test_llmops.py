@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pfithic_spark import llmops
+from pfithic_spark import cache, llmops
 
 
 @pytest.fixture(scope="module")
@@ -555,8 +555,8 @@ def test_unpersist_discipline(spark, sf_dir):
     # GROWTH bounds only (never equality-to-baseline: the baseline may
     # include checkpoint RDDs from earlier tests that the background
     # ContextCleaner releases mid-test, dropping the count below base).
-    # At most the _SIG_CACHE_KEEP most recent caches survive the sweep:
-    assert n_persistent() <= base + llmops._SIG_CACHE_KEEP
+    # At most the cache.SIGNATURES.keep most recent caches survive:
+    assert n_persistent() <= base + cache.SIGNATURES.keep
     llmops.release_signature_caches()
     assert n_persistent() <= base
     import __spark_entry__ as e

@@ -267,6 +267,7 @@ def test_probe_cache_released_when_over_threshold(spark):
     where the frame is arbitrarily large — must be unpersisted
     immediately instead of squatting in MEMORY_AND_DISK until keep-4
     eviction.  Only confirmed-small frames stay cached."""
+    from pfithic_spark import cache
     from pfithic_spark import windows as win
 
     win.release_probe_caches()
@@ -274,21 +275,49 @@ def test_probe_cache_released_when_over_threshold(spark):
         F.col("id").alias("d"), F.lit(1).alias("v")
     )
     win.scalable_cumsum(small, "d", "v", "run", small_threshold=1000)
-    assert len(win._LIVE_PROBE_CACHES) == 1
-    assert win._LIVE_PROBE_CACHES[0].is_cached
+    assert len(cache.PROBES.live) == 1
+    assert cache.PROBES.live[0].is_cached
     win.release_probe_caches()
 
     big = spark.range(5000).select(
         F.col("id").alias("d"), F.lit(1).alias("v")
     )
     out = win.scalable_cumsum(big, "d", "v", "run", small_threshold=1000)
-    assert win._LIVE_PROBE_CACHES == [], "over-threshold frame must be released"
+    assert cache.PROBES.live == [], "over-threshold frame must be released"
     # the two-phase path still computes correctly after the release
     got = {
         r["d"]: r["run"]
         for r in out.filter(F.col("d").isin([0, 4999])).collect()
     }
     assert got == {0: 1, 4999: 5000}
+
+
+def test_equal_occupancy_cache_released_with_probe_pool(spark):
+    """equal_occupancy_assign persists its per-distance input for the
+    total agg, the cumsum and the stats.  The cache lives in the
+    bounded probe pool: repeated calls keep at most its size, and
+    release_probe_caches() leaves no cached RDD behind."""
+    from pfithic_spark import cache
+    from pfithic_spark import windows as win
+
+    jsc = spark.sparkContext._jsc
+
+    def n_persistent():
+        return jsc.getPersistentRDDs().size()
+
+    win.release_probe_caches()
+    # growth bounds only: the ContextCleaner may release older RDDs
+    base = n_persistent()
+    for k in range(cache.PROBES.keep + 2):
+        byd = spark.range(40 + k).select(
+            F.col("id").alias("d"),
+            (F.col("id") % 5 + 1).alias("cc"),
+            F.lit(1).alias("np"),
+        )
+        assert len(win.equal_occupancy_assign(byd, 4).collect()) == 40 + k
+    assert n_persistent() <= base + cache.PROBES.keep
+    win.release_probe_caches()
+    assert n_persistent() <= base
 
 
 def test_scalable_cumsum_multi_two_phase(spark):
